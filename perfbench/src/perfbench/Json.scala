@@ -1,0 +1,31 @@
+package perfbench
+
+/** Minimal JSON rendering for the report lines (no dependency). */
+object Json {
+  def escape(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }
+
+  /** Renders Map / Seq / String / Boolean / numbers / Option / null.
+    * Non-finite doubles have no JSON form and render as null. */
+  def render(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => render(x)
+    case s: String => "\"" + escape(s) + "\""
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => render(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => render(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.map(render).mkString("[", ",", "]")
+    case other => render(other.toString)
+  }
+}
