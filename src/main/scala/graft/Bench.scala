@@ -125,9 +125,18 @@ object Bench {
   private def fmt(v: Double): String = BigDecimal(v)
     .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
+  /** `SPARK_GRAFT_CPUS` (4 when unset) as a positive core count; any
+    * other value fails fast — it sizes `local[...]` and the shuffle
+    * partitions and is recorded in both JSON lines, so a typo must not
+    * reach either. */
+  def parseCpus(raw: Option[String]): Int = raw.fold(4) { s =>
+    s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     // ambient machine load BEFORE any of our own work exists — the
     // anchor for the requeue threshold (VERDICT r11 #1b): the sweep's
     // own median load is useless as a baseline because a uniformly
@@ -141,7 +150,7 @@ object Bench {
     val (refTotal, refQueries, refSf) = refArtifact(fullPath)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -320,8 +329,7 @@ object Bench {
     // immediately-preceding phase (a verify sweep / data gen in the same
     // invocation) for up to a minute, which would defeat the quiet-window
     // requeue (VERDICT r12 advice).
-    val selfLoad = math.max(2.0,
-      scala.util.Try(cpus.toInt).getOrElse(4).toDouble / 8.0)
+    val selfLoad = math.max(2.0, cpus.toDouble / 8.0)
     val sweepLoads = results0.flatMap(r => Seq(r.loadStart, r.loadEnd))
     val idleAnchor =
       if (sweepLoads.isEmpty) idle0 else math.min(idle0, sweepLoads.min)

@@ -1,11 +1,13 @@
 package graft.core
 
-import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
 
 /** Parquet-backed chunk index: the chunk list of a large table stored as
@@ -14,9 +16,11 @@ import org.apache.parquet.schema.MessageTypeParser
   * multi-megabyte JSON array parsed with a tree parser on every
   * `loadTableMeta` is the wrong driver cost (SCALE.md "parquet-backed
   * index"). This reader/writer runs driver-side through parquet-hadoop
-  * directly (no Spark job — metadata must stay metadata), streams
-  * row-by-row in chunk-key order, and the file is content-addressed by
-  * its table's hash, so it is write-once like everything else. */
+  * directly (no Spark job — metadata must stay metadata), as a local
+  * file under a plain parquet configuration (no Hadoop `Configuration`
+  * or `FileSystem` per call), streams row-by-row in chunk-key order, and
+  * the file is content-addressed by its table's hash, so it is
+  * write-once like everything else. */
 object ChunkIndex {
 
   private val schema = MessageTypeParser.parseMessageType(
@@ -29,10 +33,9 @@ object ChunkIndex {
       |}""".stripMargin)
 
   def write(file: java.nio.file.Path, chunks: Seq[ChunkMeta]): Unit = {
-    val conf = new Configuration()
     val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(conf)
+      .builder(new LocalOutputFile(file))
+      .withConf(new PlainParquetConfiguration())
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
@@ -59,10 +62,12 @@ object ChunkIndex {
     * Call `close()` (or drain fully; exhaustion closes too). */
   def iterate(file: java.nio.file.Path): Iterator[ChunkMeta] with AutoCloseable =
     new Iterator[ChunkMeta] with AutoCloseable {
-      private val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(file.toString))
-        .withConf(new Configuration())
-        .build()
+      private val reader =
+        new ParquetReader.Builder[Group](new LocalInputFile(file),
+            new PlainParquetConfiguration()) {
+          override protected def getReadSupport(): ReadSupport[Group] =
+            new GroupReadSupport()
+        }.build()
       private var nextGroup: Group = reader.read()
       private var closed = false
       def close(): Unit = if (!closed) { closed = true; reader.close() }

@@ -29,7 +29,7 @@ object IncdAbProfile {
       graft.Tables(spark, sfDir, t).cache().count(): Unit)
 
     val jobs = new java.util.concurrent.atomic.AtomicInteger
-    @volatile var jobWallNs = 0L
+    val jobWallNs = new java.util.concurrent.atomic.AtomicLong
     // per-description job tallies: (count, wallNs) — names which engine
     // phase (graft:probe / graft:sample / graft:write / graft:collect*)
     // the wall moved to between variants
@@ -49,7 +49,7 @@ object IncdAbProfile {
             e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           Option(starts.remove(e.jobId)).foreach { case (t0, d) =>
             val ns = System.nanoTime() - t0
-            jobWallNs += ns
+            jobWallNs.addAndGet(ns)
             byDesc.merge(d, (1, ns),
               (a, b) => (a._1 + b._1, a._2 + b._2))
           }
@@ -124,7 +124,7 @@ object IncdAbProfile {
         val rotated = variants.drop((i - 1) % variants.size) ++
           variants.take((i - 1) % variants.size)
         rotated.foreach { case (vl, set, unset) =>
-          jobs.set(0); jobWallNs = 0L; byDesc.clear()
+          jobs.set(0); jobWallNs.set(0L); byDesc.clear()
           stmtBuf.synchronized { stmtBuf.clear() }
           org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
           val s0 = steal()
@@ -143,7 +143,7 @@ object IncdAbProfile {
           val sd = if (s0 < 0) -1 else steal() - s0
           samples(vl) = samples(vl) :+ wall
           println(f"[$q] rep $i [$vl%-14s] wall $wall%6.3f s jobs=${jobs.get} " +
-            f"jobWall ${jobWallNs / 1e9}%6.3f s gap ${wall - jobWallNs / 1e9}%6.3f s steal=${sd}cs")
+            f"jobWall ${jobWallNs.get / 1e9}%6.3f s gap ${wall - jobWallNs.get / 1e9}%6.3f s steal=${sd}cs")
           if (true) {
             import scala.jdk.CollectionConverters._
             byDesc.asScala.toSeq.sortBy(-_._2._2).foreach { case (d, (n, ns)) =>
