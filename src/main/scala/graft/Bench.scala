@@ -125,11 +125,11 @@ object Bench {
   private def fmt(v: Double): String = BigDecimal(v)
     .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
 
-  /** `SPARK_GRAFT_CPUS` (4 when unset) as a positive core count; any
-    * other value fails fast — it sizes `local[...]` and the shuffle
-    * partitions and is recorded in both JSON lines, so a typo must not
-    * reach either. */
-  def parseCpus(raw: Option[String]): Int = raw.fold(4) { s =>
+  /** `SPARK_GRAFT_CPUS` (`default` when unset) as a positive core count;
+    * any other value fails fast — it sizes `local[...]` and the shuffle
+    * partitions (and Bench records it in both JSON lines), so a typo
+    * must not reach either. */
+  def parseCpus(raw: Option[String], default: Int = 4): Int = raw.fold(default) { s =>
     s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
   }
@@ -228,23 +228,21 @@ object Bench {
     // per-statement ROUTE-ADMISSION deltas (VERDICT r13 #5): which
     // incremental route each statement actually took — driver
     // retraction, distributed retraction (and whether its net folded
-    // SCALED), append fold-in, governor denials — so a silent route
+    // SCALED), append fold-in — so a silent route
     // downgrade is visible in every bench artifact, not only under
     // GRAFT_DEBUG_DRIVER_PATCH
     def routeCounters(): Array[Long] = Array(
       graft.core.Ops.rekeyRetractFoldIns.get(),
       graft.core.Ops.rekeyRetractDistFoldIns.get(),
       graft.core.Ops.rekeyRetractScaledNets.get(),
-      graft.core.Ops.rekeyAppendFoldIns.get(),
-      graft.core.Ops.driverRouteDenials.get())
+      graft.core.Ops.rekeyAppendFoldIns.get())
     var stmtRouteMark: Array[Long] = routeCounters()
     graft.sql.GraftSql.stmtProbe = Some { (sql, sec) =>
       val j = listener.jobs.get()
       val rc = routeCounters()
       val rd = rc.zip(stmtRouteMark).map { case (a, b) => a - b }
       val routes = s""""retract_drv":${rd(0)},"retract_dist":${rd(1)},""" +
-        s""""retract_scaled":${rd(2)},"fold_ins":${rd(3)},""" +
-        s""""route_denials":${rd(4)}"""
+        s""""retract_scaled":${rd(2)},"fold_ins":${rd(3)}"""
       stmtBuf.synchronized { stmtBuf += ((sql, sec, j - stmtJobsMark, routes)); () }
       stmtJobsMark = j
       stmtRouteMark = rc
@@ -261,7 +259,6 @@ object Bench {
       drain()
       val l0 = listener.snapshot
       val gc0 = driverGcMs; val cpu0 = procCpuNs
-      val denials0 = graft.core.Ops.driverRouteDenials.get()
       val routes0 = routeCounters()
       val steal0 = stealJiffies
       val loadStart = load1
@@ -279,10 +276,6 @@ object Bench {
       val l1 = listener.snapshot
       def d(k: String): Long = l1(k) - l0(k)
       val env = Seq(
-        // DELTA, like every sibling env metric — the cumulative counter
-        // would attribute all prior denials to each later query
-        "route_denials" ->
-          (graft.core.Ops.driverRouteDenials.get() - denials0).toString,
         // retraction-admission deltas (VERDICT r13 #5): driver vs
         // distributed (and scaled-net) vs append fold-in, per query
         "retract_drv" ->
@@ -452,40 +445,40 @@ object Bench {
     val excessStanding = polluted0 && refCommon.exists(rt =>
       rt > 0 && commonTotal(results) > retrigger * rt)
     val requeued = results.count(_.requeue.nonEmpty)
-    // governor degradation twin (VERDICT r10 #4): the driver-route
-    // governor's denial path has only ever run inside specs — exercise
-    // it IN the artifact. One statement flow runs twice: normal, then
-    // with the cost model forced slow (every above-floor driver route
-    // projects over budget and is DENIED to the distributed path). The
-    // artifact records the denial delta and result-hash equality —
-    // degraded and normal routes must be bit-identical.
-    val governorTwin: Option[(Long, Boolean, Double)] =
+    // forced-job-route twin: the distributed fallback of every bulk
+    // driver route otherwise runs only inside specs — exercise it IN the
+    // artifact. One statement flow runs twice: normal, then under
+    // Ops.withBulkDriverRoutesOff (every driver route above 1,024 rows
+    // takes its Spark job path). The artifact records the extra Spark
+    // jobs the forced run issued and result-hash equality — forced and
+    // normal routes must be bit-identical.
+    val jobRouteTwin: Option[(Long, Boolean, Double)] =
       try selected.get("sql_dml").orElse(SparkEntry.queries.get("sql_dml"))
         .map { fn =>
           import org.apache.spark.sql.functions._
-          def sig(): (Long, Long) = {
+          def sig(): ((Long, Long), Long) = {
+            drain()
+            val j0 = listener.jobs.get()
             val df = fn(spark, sfDir)
             val r = df.select(
               coalesce(sum(crc32(to_json(struct(
                 df.columns.sorted.map(col): _*)))), lit(0L)),
               count(lit(1))).collect()(0)
-            (r.getLong(0), r.getLong(1))
+            drain()
+            ((r.getLong(0), r.getLong(1)), listener.jobs.get() - j0)
           }
-          val normal = sig()
-          val d0 = graft.core.Ops.driverRouteDenials.get()
-          graft.core.Ops.driverRouteNprOverride = Some(10000000L) // 10 ms/row
+          val (normal, normalJobs) = sig()
           val t0 = System.nanoTime()
-          try {
-            val degraded = sig()
-            ((graft.core.Ops.driverRouteDenials.get() - d0),
-              degraded == normal, (System.nanoTime() - t0) / 1e9)
-          } finally graft.core.Ops.driverRouteNprOverride = None
+          val (forced, forcedJobs) =
+            graft.core.Ops.withBulkDriverRoutesOff(sig())
+          (forcedJobs - normalJobs, forced == normal,
+            (System.nanoTime() - t0) / 1e9)
         }
       catch {
         // the twin must never destroy the sweep's artifact: an sql_dml
         // failure is already recorded as an error by the sweep itself
         case t: Throwable =>
-          System.err.println(s"[bench] GOVERNOR TWIN FAILED: $t"); None
+          System.err.println(s"[bench] JOB ROUTE TWIN FAILED: $t"); None
       }
     // durable-anchor CC twin (VERDICT r11 #5): the real-cluster survival
     // lever (RELIABLE checkpoint anchors every k rounds) previously ran
@@ -590,8 +583,8 @@ object Bench {
       val reasons = requeueReason
         .map { case (n, why) => "\"" + n + "\":\"" + why + "\"" }
         .mkString("{", ",", "}")
-      val gov = governorTwin.map { case (den, eq, sec) =>
-        s"""{"denials":$den,"hash_equal":$eq,"sec":${fmt(sec)}}"""
+      val jobTwin = jobRouteTwin.map { case (extra, eq, sec) =>
+        s"""{"extra_jobs":$extra,"hash_equal":$eq,"sec":${fmt(sec)}}"""
       }.getOrElse("null")
       val cc = ccTwin.map { case (n, d, eq, rec) =>
         s"""{"normal_sec":${fmt(n)},"durable_sec":${fmt(d)},"hash_equal":$eq,"recoveries":$rec}"""
@@ -604,7 +597,7 @@ object Bench {
       val warmed = (Tables.names ++ Seq(
         "dedup.shingles", "dedup.shinglesSized", "vectors.quantized"))
         .map("\"" + _ + "\"").mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"warmed":$warmed,"queries":$qs,"runs":$runs,"start":$starts,"env":$env,"stmts":$stmts,"requeue":$requeues,"requeue_reason":$reasons,"governor_twin":$gov,"cc_durable_twin":$cc,"xscale":$xscaleJson,"idle0":${fmt(idle0)},"idle_anchor":${fmt(idleAnchor)},"ref_total":${refTotal.map(fmt).getOrElse("null")},"ref_common":${refCommon.map(fmt).getOrElse("null")},"common_total":${fmt(commonTotal(results))},"load_polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"warmed":$warmed,"queries":$qs,"runs":$runs,"start":$starts,"env":$env,"stmts":$stmts,"requeue":$requeues,"requeue_reason":$reasons,"job_route_twin":$jobTwin,"cc_durable_twin":$cc,"xscale":$xscaleJson,"idle0":${fmt(idle0)},"idle_anchor":${fmt(idleAnchor)},"ref_total":${refTotal.map(fmt).getOrElse("null")},"ref_common":${refCommon.map(fmt).getOrElse("null")},"common_total":${fmt(commonTotal(results))},"load_polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"errors":$errors,"sf":"$sfDir"}"""
     }
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(fullPath),
@@ -641,14 +634,14 @@ object Bench {
     val loadJson = if (loads.isEmpty) "null" else
       s"""{"min":${fmt(loads.min)},"max":${fmt(loads.max)},"median":${fmt(
         medLoad)},"idle0":${fmt(idle0)},"requeue_thr":${fmt(requeueLoad)},"requeued":$requeued,"polluted":$loadPolluted,"excess_standing":$excessStanding,"pollution_requeues":$pollutionRequeues,"steal_cs":$stealTotal}"""
-    val govCompact = governorTwin.map { case (den, eq, _) =>
-      s"""{"denials":$den,"hash_equal":$eq}"""
+    val jobTwinCompact = jobRouteTwin.map { case (extra, eq, _) =>
+      s"""{"extra_jobs":$extra,"hash_equal":$eq}"""
     }.getOrElse("null")
     val ccCompact = ccTwin.map { case (n, d, eq, rec) =>
       s"""{"normal":${fmt(n)},"durable":${fmt(d)},"hash_equal":$eq,"recoveries":$rec}"""
     }.getOrElse("null")
     def line(qsCompact: String, omittedJson: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"queries":$qsCompact,"omitted_fastest":$omittedJson,"load":$loadJson,"governor_twin":$govCompact,"cc_durable_twin":$ccCompact,"xscale":$xscaleJson,"full":"$fullPath","errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"value_all":${fmt(totalAll)},"unit":"sec","timing":"min_all","cpus":$cpus,"warm_cache":true,"queries":$qsCompact,"omitted_fastest":$omittedJson,"load":$loadJson,"job_route_twin":$jobTwinCompact,"cc_durable_twin":$ccCompact,"xscale":$xscaleJson,"full":"$fullPath","errors":$errors,"sf":"$sfDir"}"""
     val lineTarget = 1600
     val fixedLen = line("{}", s"""{"n":${ok.size},"sum":${fmt(
       ok.map(_._2).sum)}}""").length

@@ -1108,17 +1108,17 @@ object Canonical {
     * [[Ops.DriverPatchHardRowCap]] (1M) rows, and above ~64Ki rows the
     * interpreted evaluation of the collect's own plan (key-encode UDF +
     * the ingest fold) loses to paying one codegen compile. Measured
-    * with tools/CtasProfile (A/B interleaved, 2×3 reps, sf0.1/
-    * local[32]): a 600k-row × ~80 B/row CTAS collect halves under
-    * codegen (job 2.1–2.8 s vs 3.6–6.6 s across both runs) while a
-    * 600k-row-bound × 24 B/row aggregated ingest consistently favors
-    * interpreted (its per-row work is a narrow hash-agg probe; the
-    * compile cost of the two-level fold plan dominates) — so the edge
-    * is a BYTE threshold scaled by estimated row width (the
-    * [[Ops.adaptiveRowCap]] idiom), not a row count: 16 MB of
-    * estimated row bytes sits between the two measured points.
-    * `var` as a measurement seam (tools/CtasProfile A/Bs it);
-    * production never writes it. */
+    * A/B interleaved (2×3 reps, sf0.1/local[32]): a 600k-row ×
+    * ~80 B/row CTAS collect halves under codegen (job 2.1–2.8 s vs
+    * 3.6–6.6 s across both runs) while a 600k-row-bound × 24 B/row
+    * aggregated ingest consistently favors interpreted (its per-row
+    * work is a narrow hash-agg probe; the compile cost of the two-level
+    * fold plan dominates) — so the edge is a BYTE threshold scaled by
+    * estimated row width (the [[Ops.adaptiveRowCap]] idiom), not a row
+    * count: 16 MB of estimated row bytes sits between the two measured
+    * points.
+    * `var` as a test seam (DriverRouteSpec runs a flow under both
+    * modes); production never writes it. */
   @volatile private[graft] var InterpretedCollectMaxBytes: Long = 16L << 20
 
   /** The byte-admitted collect sites' interpreted admission: estimated

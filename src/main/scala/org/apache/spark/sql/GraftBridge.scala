@@ -144,8 +144,9 @@ object GraftBridge {
     *    using Spark's own maxSplitBytes formula — an upper bound (file
     *    packing only merges), which errs toward "narrow" and never
     *    misses a genuinely wide scan.
-    * None for any other shape (joins, shuffles, unions) — callers treat
-    * unknown as already-parallel, the identity at scale. */
+    * None for any other shape (joins, shuffles, unions, driver-local
+    * rows) — callers treat unknown as already-parallel, the identity at
+    * scale. */
   def plannedScanPartitions(spark: SparkSession, df: Dataset[_]): Option[Int] = {
     import org.apache.spark.sql.catalyst.plans.logical._
     def fsEstimate(fs: execution.datasources.HadoopFsRelation): Option[Int] = {
@@ -178,9 +179,9 @@ object GraftBridge {
         case fs: execution.datasources.HadoopFsRelation => fsEstimate(fs)
         case _ => None
       }
-      // driver-local rows plan as a handful of LocalTableScan slices:
-      // narrow by construction
-      case _: LocalRelation => Some(1)
+      // driver-local rows (LocalRelation) fall through to None: their
+      // rows are already in driver memory, and an exchange would only
+      // add a shuffle stage in front of driver-sized work
       case _ => None
     }
     // optimizedPlan: cached-relation substitution happens post-analysis,

@@ -5,10 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchSpec extends AnyFunSuite {
   test("SPARK_GRAFT_CPUS parses to a positive core count or fails naming the variable") {
     assert(Bench.parseCpus(None) == 4)
+    assert(Bench.parseCpus(None, 32) == 32)
+    assert(Bench.parseCpus(Some("8"), 32) == 8)
     assert(Bench.parseCpus(Some(" 8 ")) == 8)
     for (bad <- Seq("", "0", "-2", "4x", "eight")) {
       val e = intercept[IllegalArgumentException](Bench.parseCpus(Some(bad)))
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), bad)
+      intercept[IllegalArgumentException](Bench.parseCpus(Some(bad), 32))
     }
   }
 }

@@ -284,6 +284,11 @@ class PlanSpec extends AnyFunSuite {
     try {
       val out = Tables.spread(spark, shuffled)
       assert(out eq shuffled, "unknown shape must be the identity")
+      // driver-local rows: no exchange in front of driver-sized work
+      val local = spark.createDataFrame(Seq((1L, "a"), (2L, "b")))
+      val spreadLocal = Tables.spread(spark, local)
+      assert(spreadLocal eq local, "a LocalRelation frame must be the identity")
+      assert(!spreadLocal.queryExecution.logical.toString.contains("Repartition"))
       val narrow = Tables.spread(spark, docs)
       GraftBridge.drainListenerBus(spark.sparkContext)
       assert(jobs.get() == 0, "the spread gate must never run a job")

@@ -91,10 +91,10 @@ class RouteFuzzSpec extends AnyFunSuite {
     Seq(11L, 23L).foreach { seed =>
       val stmts = program(seed)
       // (pointDmlViaPatch, driverPatchEnabled, driverMaterializeEnabled,
-      //  governor-forced-slow, byte-budget-1): the governor config keeps
-      // every route flag ON but forces the measured-throughput governor
-      // to deny bulk driver routes — the degraded-driver mix of paths
-      // (round-10 governor) must hash-converge like any other config;
+      //  bulk-driver-routes-off, byte-budget-1): the bulk-off config keeps
+      // every route flag ON but runs under Ops.withBulkDriverRoutesOff,
+      // so every driver route above 1,024 rows takes its job path — that
+      // mix of paths must hash-converge like any other config;
       // the byte-budget-1 config declines every byte-admitted driver
       // diff so refreshes exercise the DISTRIBUTED fold-in and the
       // DISTRIBUTED retraction (round-13 mergeRetract) across the whole
@@ -104,18 +104,18 @@ class RouteFuzzSpec extends AnyFunSuite {
         (false, true, true, false, false), (true, true, false, false, false),
         (true, true, true, true, false), (true, true, true, false, true))
       val results = configs.map {
-        case (viaPatch, driverPatch, driverMat, slow, bytes1) =>
+        case (viaPatch, driverPatch, driverMat, bulkOff, bytes1) =>
         GraftSql.pointDmlViaPatch = viaPatch
         Ops.driverPatchEnabled = driverPatch
         Canonical.driverMaterializeEnabled = driverMat
-        Ops.driverRouteNprOverride =
-          if (slow) Some(10L * 1000L * 1000L) else None
         val savedBytes = Ops.DriverPatchMaxBytes
         if (bytes1) Ops.DriverPatchMaxBytes = 1L
         val dist0 = Ops.rekeyRetractDistFoldIns.get()
         val scaled0 = Ops.rekeyRetractScaledNets.get()
         try {
-          val r = runProgram(stmts)
+          val r =
+            if (bulkOff) Ops.withBulkDriverRoutesOff(runProgram(stmts))
+            else runProgram(stmts)
           if (bytes1) {
             assert(Ops.rekeyRetractDistFoldIns.get() > dist0,
               s"seed $seed: byte-budget-1 config never took the " +
@@ -134,7 +134,6 @@ class RouteFuzzSpec extends AnyFunSuite {
           GraftSql.pointDmlViaPatch = true
           Ops.driverPatchEnabled = true
           Canonical.driverMaterializeEnabled = true
-          Ops.driverRouteNprOverride = None
           Ops.DriverPatchMaxBytes = savedBytes
         }
       }
